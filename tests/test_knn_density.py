@@ -11,6 +11,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -215,3 +216,132 @@ def test_salted_knn_grid_identical_results(spark):
         for r in K.knn_grid(df, df, k=3, ring=1, res=7, salt_buckets=8).collect()
     )
     assert plain == salted and len(plain) > 0
+
+
+def _cell_xy(lat, lon, res):
+    """numpy twin of cells.grid_cell_xy (clamped gx, gy at res)."""
+    s = 180.0 / (1 << res)
+    gx = np.clip(np.floor((lon + 180.0) / s), 0, 2 * (1 << res) - 1).astype(np.int64)
+    gy = np.clip(np.floor((lat + 90.0) / s), 0, (1 << res) - 1).astype(np.int64)
+    return gx, gy
+
+
+def _ring_topk(q_pdf, c_pdf, tiers, ring, k):
+    """numpy oracle of the best-effort rows: per query, the top-k (dist_sq,
+    id) among corpus points whose cell at the QUERY'S tier lies within
+    Chebyshev distance `ring` of the query's cell (gx wraps, gy does not),
+    self excluded."""
+    c_url = c_pdf["url"].to_numpy()
+    c_lat = c_pdf["lat"].to_numpy(dtype=np.float64)
+    c_lon = c_pdf["lon"].to_numpy(dtype=np.float64)
+    out = {}
+    for url, qlat, qlon in zip(q_pdf["url"], q_pdf["lat"], q_pdf["lon"]):
+        t = tiers[url]
+        nx = 2 * (1 << t)
+        cgx, cgy = _cell_xy(c_lat, c_lon, t)
+        qgx, qgy = _cell_xy(np.array([qlat]), np.array([qlon]), t)
+        dgx = np.abs(cgx - qgx[0])
+        near = (np.minimum(dgx, nx - dgx) <= ring) & (np.abs(cgy - qgy[0]) <= ring) & (c_url != url)
+        adlon = np.abs(c_lon[near] - qlon)
+        dx = np.minimum(adlon, 360.0 - adlon)
+        dy = c_lat[near] - qlat
+        rows = sorted(zip(dx * dx + dy * dy, c_url[near]))[:k]
+        if rows:
+            out[url] = rows
+    return out
+
+
+@pytest.mark.parametrize("max_rounds", [1, 2])
+def test_straggler_rows_pinned_at_max_rounds(spark, max_rounds):
+    """The final round emits every untrusted query's best-effort rows:
+    with the round budget cut to 1 or 2, each query's output is exactly
+    the top-k within the LAST ring (2^(max_rounds-1)) at its own tier — on
+    a query set spread over several density tiers, some of whose queries
+    are stragglers."""
+    geo = gen_pages(2000)[["url", "lat", "lon"]].dropna().reset_index(drop=True)
+    df = spark.createDataFrame(geo).localCheckpoint()
+    q = df.filter(F.abs(F.xxhash64("url")) % 8 == 0).localCheckpoint()
+    k = 5
+    tiers = {
+        r["url"]: r["_knn_res"]
+        for r in K.assign_density_res(q, df, res=7, res_max=15, step=2, dense_threshold=16).collect()
+    }
+    assert len(set(tiers.values())) >= 2
+    got = K.knn_grid_density(q, df, k=k, res=7, res_max=15, step=2, max_rounds=max_rounds).collect()
+    by_q: dict = {}
+    for r in got:
+        by_q.setdefault(r["url_q"], []).append((r["rank"], r["dist_sq"], r["neighbor_id"]))
+    by_q = {u: [(d, n) for _, d, n in sorted(rows)] for u, rows in by_q.items()}
+    q_pdf = q.toPandas()
+    assert by_q == _ring_topk(q_pdf, geo, tiers, 1 << (max_rounds - 1), k)
+    # the budget really cut some queries short of their true top-k
+    exact = _brute_topk(q_pdf, geo, k)
+    assert any(by_q.get(u) != [(d, n) for d, n in exact[u]] for u in exact)
+
+
+def test_empty_and_null_query_sets_return_schema(spark):
+    """No query with usable coordinates: the 4-column result schema, 0 rows."""
+    geo = gen_pages(300)[["url", "lat", "lon"]].dropna()
+    df = spark.createDataFrame(geo)
+    no_coords = spark.createDataFrame(
+        [("a", None, None), ("b", None, 1.0), ("c", float("nan"), 2.0)], "url string, lat double, lon double"
+    )
+    for q in (df.limit(0), no_coords):
+        for out in (K.knn_grid_density(q, df, k=3), K.knn_grid_adaptive(q, df, k=3)):
+            assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+                ("url_q", "string"),
+                ("neighbor_id", "string"),
+                ("dist_sq", "double"),
+                ("rank", "int"),
+            ]
+            assert out.count() == 0
+
+
+@pytest.mark.parametrize("sample_fraction", [None, 0.5])
+def test_one_pass_ladder_matches_pandas(spark, sample_fraction):
+    """The one-pass density ladder equals a pandas sum, per ladder cell, of
+    the fine-cell counts — each scaled by 1/fraction and truncated before
+    the sum when sampled — and picks each query's finest dense level."""
+    geo = gen_pages(2000)[["url", "lat", "lon"]].dropna()
+    df = spark.createDataFrame(geo).localCheckpoint()
+    res, res_max, step, thr = 7, 15, 2, 8
+    got = {
+        r["url"]: r["_knn_res"]
+        for r in K.assign_density_res(
+            df, df, res=res, res_max=res_max, step=step, dense_threshold=thr, sample_fraction=sample_fraction
+        ).collect()
+    }
+    src = df.sample(fraction=sample_fraction, seed=42) if sample_fraction else df
+    s_pdf = src.toPandas()
+    gx, gy = _cell_xy(s_pdf["lat"].to_numpy(), s_pdf["lon"].to_numpy(), res_max)
+    fine = pd.DataFrame({"gx": gx, "gy": gy}).groupby(["gx", "gy"]).size().rename("cnt").reset_index()
+    if sample_fraction:
+        fine["cnt"] = (fine["cnt"] / sample_fraction).astype(np.int64)
+    qgx, qgy = _cell_xy(geo["lat"].to_numpy(), geo["lon"].to_numpy(), res_max)
+    want = np.full(len(geo), res)
+    for lvl in range(res_max, res, -step):  # finest first: keep the first dense hit
+        sh = res_max - lvl
+        sums = fine.groupby([fine["gx"].to_numpy() >> sh, fine["gy"].to_numpy() >> sh])["cnt"].sum()
+        dense = set(sums[sums >= thr].index)
+        hit = np.array([(a, b) in dense for a, b in zip(qgx >> sh, qgy >> sh)])
+        want = np.where((want == res) & hit, lvl, want)
+    assert got == dict(zip(geo["url"], want.tolist()))
+    assert len(set(want.tolist())) >= 3
+
+
+def test_partitioned_tier_corpus_matches_broadcast(spark, monkeypatch):
+    """Past _BROADCAST_MAX_QUERIES the loop joins a corpus partitioned and
+    sorted once on (_t, j_gx, j_gy) instead of broadcasting the queries:
+    an execution-strategy change only, so the rows are identical."""
+    geo = gen_pages(2000)[["url", "lat", "lon"]].dropna()
+    df = spark.createDataFrame(geo).localCheckpoint()
+    q = df.filter(F.abs(F.xxhash64("url")) % 8 == 0).localCheckpoint()
+
+    def run():
+        return sorted(
+            tuple(r) for r in K.knn_grid_density(q, df, k=5, res=7, res_max=15, step=2, max_rounds=3).collect()
+        )
+
+    broadcast = run()
+    monkeypatch.setattr(K, "_BROADCAST_MAX_QUERIES", 0)
+    assert run() == broadcast and len(broadcast) > 0

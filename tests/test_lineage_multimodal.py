@@ -179,3 +179,24 @@ def test_partition_metrics_cover_all_rows(spark, tmp_path):
     assert sum(r["row_count"] for r in rows) == 10000
     assert all(r["partition_id"] is not None for r in rows)
     assert len({r["input_fingerprint"] for r in rows}) == 8
+
+
+def test_lineage_record_builds_a_local_relation(spark, tmp_path, monkeypatch):
+    """record() hands Spark a pandas frame, so the rows arrive as an
+    Arrow-backed LocalRelation and the append write is the only job (a row
+    list would first run a Python-RDD conversion job)."""
+    made = []
+    create = spark.createDataFrame
+
+    def spy(*args, **kwargs):
+        made.append(create(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(spark, "createDataFrame", spy)
+    log = LineageLog(spark, str(tmp_path))
+    log.record("s1", [("b1", None, 10, None), ("b2", 3, None, "ab")], "SUCCESS")
+    plan = made[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    monkeypatch.undo()
+    rows = sorted((r["batch_id"], r["partition_id"], r["row_count"], r["input_fingerprint"]) for r in log.read().collect())
+    assert rows == [("b1", None, 10, None), ("b2", 3, None, "ab")]

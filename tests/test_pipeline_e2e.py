@@ -75,6 +75,9 @@ def test_run_pipeline_trackless_pages(spark, tmp_path):
     paths = run_pipeline(spark, pages, polys, str(tmp_path / "out"), resume=False)
     assert "lineage_metrics" not in paths  # track stages skipped, not crashed
     assert spark.read.parquet(paths["l1"]).count() == 50
+    # the L1 lineage row count is observed on the write job itself
+    l1_log = LineageLog(spark, str(tmp_path / "out")).read().filter(F.col("stage") == "l1")
+    assert [r["row_count"] for r in l1_log.collect()] == [50]
     assert spark.read.parquet(paths["pip"]).count() == 50
 
 

@@ -120,3 +120,24 @@ def test_r3_operators_on_empty_input(spark):
     iv = spark.createDataFrame([(1, 0, 10)], "win_id long, start long, end long")
     assert interval_join(pts, iv, bucket_width=5).count() == 0
     assert interval_join(pts, iv, bucket_width=5, how="left").count() == 0
+
+
+def test_empty_vocabulary_through_jaccard_and_dedup(spark):
+    """Every document's token set empty (or a single document): the bitmap
+    paths get a zero-token vocabulary and must return no pairs / keep every
+    document instead of failing in the popcount kernel."""
+    from water_column_sonar_processing_spark.operators import dedup as dedup_op
+
+    # df_order=False keeps integer tokens as they are, so empty sets reach
+    # the bitmap scan with nothing to factorize (the failing case)
+    empty_sets = spark.createDataFrame([(1, []), (2, []), (3, [])], "doc_id long, sh array<bigint>")
+    assert dedup_op.jaccard_selfjoin_exact(empty_sets, threshold_x1000=150, df_order=False).count() == 0
+    one_set = spark.createDataFrame([(1, [5, 7, 9])], "doc_id long, sh array<bigint>")
+    assert dedup_op.jaccard_selfjoin_exact(one_set, threshold_x1000=150, df_order=False).count() == 0
+    empty_text = spark.createDataFrame([(1, []), (2, [])], "doc_id long, sh array<string>")
+    assert dedup_op.jaccard_selfjoin_exact(empty_text, threshold_x1000=150).count() == 0
+
+    null_docs = spark.createDataFrame([(1, None), (2, None), (3, None)], "doc_id long, text string")
+    assert sorted(r["doc_id"] for r in dedup_op.dedup_corpus(null_docs).collect()) == [1, 2, 3]
+    single = spark.createDataFrame([(7, "one lonely document")], "doc_id long, text string")
+    assert [r["doc_id"] for r in dedup_op.dedup_corpus(single).collect()] == [7]

@@ -380,7 +380,9 @@ def _collect_bitmap(sets: DataFrame, id_col: str, set_col: str):
     w_bytes = ((vocab + 63) // 64) * 8
     if nd * w_bytes > budget:
         return None
-    matrix = np.zeros((nd, max(w_bytes, 1)), dtype=np.uint8)
+    # an empty vocabulary still gets one 8-byte word: the SWAR popcount
+    # views each row as uint64
+    matrix = np.zeros((nd, max(w_bytes, 8)), dtype=np.uint8)
     offs = np.zeros(nd + 1, dtype=np.int64)
     np.cumsum(lens, out=offs[1:])
     if vocab:

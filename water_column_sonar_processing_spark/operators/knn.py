@@ -36,7 +36,6 @@ def _grid_candidates(
     lon: str = "lon",
     salt_buckets: int | None = None,
     corpus_prepared: DataFrame | None = None,
-    broadcast_queries: bool = False,
 ) -> DataFrame:
     """The k-ring candidate join shared by knn_grid and the density tests:
     (q_id, q_lat, q_lon, n_id, n_lat, n_lon) for every corpus point whose
@@ -61,20 +60,13 @@ def _grid_candidates(
     — already projected to (n_id, n_lat, n_lon, j_gx, j_gy), hash-
     partitioned AND sorted on the join keys, and checkpointed. The join
     then reuses that partitioning/ordering (no corpus-side Exchange or
-    Sort per call), which is what makes knn_grid_adaptive's round loop
-    pay the corpus shuffle ONCE per tier instead of once per round.
+    Sort per call); knn_grid_adaptive's round loop joins the same frame,
+    so it pays the corpus shuffle ONCE instead of once per round.
     Mutually exclusive with salt_buckets (salting re-keys the join)."""
     if corpus_prepared is not None and salt_buckets:
         raise ValueError("corpus_prepared and salt_buckets are mutually exclusive")
     if corpus_prepared is not None:
-        prep_res = getattr(corpus_prepared, "_wcsp_prep_res", None)
-        if prep_res != res:
-            # a res mismatch would equi-join numerically-coincidental cell
-            # coords and silently return wrong neighbors
-            raise ValueError(
-                f"corpus_prepared was built at res={prep_res} (need {res}); "
-                "pass a frame from prepare_corpus_cells(corpus, res)"
-            )
+        _check_prepared(corpus_prepared, res)
     nx = 2 * (1 << res)
     q_gx, q_gy = cells.grid_cell_xy(F.col(lat), F.col(lon), res)
     q = (
@@ -114,14 +106,6 @@ def _grid_candidates(
             .drop("_salt")
             .filter(F.col("q_id") != F.col("n_id"))
         )
-    if broadcast_queries:
-        # explicit hint (r6): when the caller KNOWS the exploded query
-        # side is small (knn_grid_density's tier loop holds the exact
-        # per-tier count), force the broadcast — Catalyst's size estimate
-        # for a filtered scan misses it and falls back to a sort-merge
-        # join that re-shuffles the FULL corpus every escalation round
-        # (profiled at 5M rows: 4.84M corpus rows shuffled 3x per run)
-        q_exp = F.broadcast(q_exp)
     return q_exp.join(c, ["j_gx", "j_gy"]).filter(F.col("q_id") != F.col("n_id"))
 
 
@@ -156,10 +140,10 @@ def prepare_corpus_cells(
     hash-partition + sort it on the join keys, and localCheckpoint so the
     LogicalRDD keeps the partitioning/ordering metadata: every subsequent
     _grid_candidates join against it skips the corpus-side Exchange and
-    Sort (the query side shuffles to match — tiny). Used by
-    knn_grid_adaptive/knn_grid_density to pay the corpus shuffle once per
-    TIER instead of once per escalation round. The frame is stamped with
-    the res it was built at; _grid_candidates refuses a mismatched one."""
+    Sort (the query side shuffles to match — tiny). knn_grid_adaptive
+    uses it to pay the corpus shuffle once instead of once per escalation
+    round. The frame is stamped with the res it was built at; a
+    mismatched one is refused."""
     prepped = _project_corpus_cells(corpus, res, corpus_id, lat, lon)
     if num_partitions:
         prepped = prepped.repartition(num_partitions, "j_gx", "j_gy")
@@ -182,7 +166,6 @@ def knn_grid(
     lon: str = "lon",
     salt_buckets: int | None = None,
     corpus_prepared: DataFrame | None = None,
-    broadcast_queries: bool = False,
 ) -> DataFrame:
     """Bounded-radius kNN on the equirect grid.
 
@@ -195,7 +178,6 @@ def knn_grid(
     cand = _grid_candidates(
         queries, corpus, ring, res, query_id, corpus_id, lat, lon,
         salt_buckets=salt_buckets, corpus_prepared=corpus_prepared,
-        broadcast_queries=broadcast_queries,
     )
     # antimeridian-aware distance: dlon wraps (the candidate generation
     # wraps j_gx, so ranking must agree or wrapped candidates score ~360deg
@@ -312,6 +294,174 @@ def knn_hex(
     )
 
 
+def _check_prepared(corpus_prepared: DataFrame, res: int) -> None:
+    prep_res = getattr(corpus_prepared, "_wcsp_prep_res", None)
+    if prep_res != res:
+        # a res mismatch would equi-join numerically-coincidental cell
+        # coords and silently return wrong neighbors
+        raise ValueError(
+            f"corpus_prepared was built at res={prep_res} (need {res}); "
+            "pass a frame from prepare_corpus_cells(corpus, res)"
+        )
+
+
+# a query side up to this many rows is broadcast into every escalation
+# round (no corpus shuffle at all); a larger one joins a corpus that is
+# partitioned and sorted on (_t, j_gx, j_gy) once. 50k queries x ~9 ring
+# cells x ~60 B/row ~ 27 MB — past any sane autoBroadcast setting.
+_BROADCAST_MAX_QUERIES = 50_000
+
+# grid_cell_xy's cell size at each row's tier `_t`, as SQL: 180/2^t is
+# exact in binary, so the per-row value equals grid_cell_xy's literal bit
+# for bit (and so do the cells and trust radii derived from it)
+_CELL_DEG = "(180.0D / shiftleft(1L, _t))"
+
+
+def _tier_cells_sql(lat: str, lon: str) -> tuple[str, str]:
+    """grid_cell_xy (gx, gy) at each row's tier `_t` (NaN rows are
+    filtered out before, by _valid)."""
+    gx = f"greatest(least(floor(({lon} + 180.0D) / {_CELL_DEG}), shiftleft(2L, _t) - 1), 0)"
+    gy = f"greatest(least(floor(({lat} + 90.0D) / {_CELL_DEG}), shiftleft(1L, _t) - 1), 0)"
+    return gx, gy
+
+
+def _valid(lat: str, lon: str):
+    return F.col(lat).isNotNull() & F.col(lon).isNotNull() & ~F.isnan(lat) & ~F.isnan(lon)
+
+
+def _tier_corpus(corpus: DataFrame, tiers: str, corpus_id: str, lat: str, lon: str) -> DataFrame:
+    """The corpus keyed at every tier of the SQL list `tiers`: one
+    (n_id, n_lat, n_lon, _t, j_gx, j_gy) row per point and tier."""
+    gx, gy = _tier_cells_sql("n_lat", "n_lon")
+    return (
+        corpus.filter(_valid(lat, lon))
+        .select(F.col(corpus_id).alias("n_id"), F.col(lat).alias("n_lat"), F.col(lon).alias("n_lon"))
+        .selectExpr("*", f"explode(array({tiers})) AS _t")
+        .selectExpr("*", f"{gx} AS j_gx", f"{gy} AS j_gy")
+    )
+
+
+def _escalate(
+    queries: DataFrame,
+    tier,
+    corpus: DataFrame,
+    k: int,
+    max_rounds: int,
+    query_id: str,
+    corpus_id: str,
+    lat: str,
+    lon: str,
+    corpus_prepared: DataFrame | None = None,
+    broadcast_queries: bool | None = None,
+) -> DataFrame:
+    """Guaranteed-k kNN by trust-radius ring escalation, for queries whose
+    starting resolution (`tier`, an int column) may differ row to row.
+
+    Round i joins every remaining query's ring 2^i at its own tier to the
+    corpus keyed at every live tier as (_t, j_gx, j_gy): one join per
+    round serves all tiers. A query whose top-k holds k rows all within
+    ring * cell_size is trusted (a farther row could be beaten by a point
+    in an unexplored cell) and stops; the final round emits the rest's
+    best-effort rows. Trust is decided over the rank's q_id partitioning,
+    and each round is checkpointed once for its trusted rows, its
+    per-tier counts and the next round's anti-join.
+
+    broadcast_queries: True broadcasts every round's query side; None
+    (auto) does so up to _BROADCAST_MAX_QUERIES queries and otherwise
+    partitions and sorts the tier-keyed corpus once. corpus_prepared: a
+    prepare_corpus_cells frame, for a single tier at its res."""
+    if max_rounds < 1:
+        raise ValueError(f"max_rounds must be >= 1 (got {max_rounds})")
+    gx, gy = _tier_cells_sql("q_lat", "q_lon")
+    rem = (
+        queries.filter(_valid(lat, lon))
+        .select(
+            F.col(query_id).alias("q_id"),
+            F.col(lat).alias("q_lat"),
+            F.col(lon).alias("q_lon"),
+            tier.cast("int").alias("_t"),
+        )
+        .selectExpr("*", f"{gx} AS q_gx", f"{gy} AS q_gy")
+        .localCheckpoint(eager=False)
+    )
+    live = {r["_t"]: r["count"] for r in rem.groupBy("_t").count().collect()}
+
+    def sql_list(tiers) -> str:  # "0" stands in for no tier: it matches no query
+        return ", ".join(map(str, sorted(tiers))) or "0"
+
+    if broadcast_queries is None:
+        broadcast_queries = sum(live.values()) <= _BROADCAST_MAX_QUERIES
+        if not broadcast_queries and corpus_prepared is None:
+            corpus_prepared = (
+                _tier_corpus(corpus, sql_list(live), corpus_id, lat, lon)
+                .repartition("_t", "j_gx", "j_gy")
+                .sortWithinPartitions("_t", "j_gx", "j_gy")
+                .localCheckpoint()
+            )
+    w = Window.partitionBy("q_id").orderBy(F.col("dist_sq").asc(), F.col("n_id").asc())
+    wq = Window.partitionBy("q_id")
+    dist = geo.planar_deg_sq_wrapped(F.col("q_lat"), F.col("q_lon"), F.col("n_lat"), F.col("n_lon"))
+    parts: list[DataFrame] = []
+    for i in range(max_rounds):
+        ring = 1 << i
+        tiers = sql_list(live)
+        if corpus_prepared is None:
+            c, keys = _tier_corpus(corpus, tiers, corpus_id, lat, lon), ["_t", "j_gx", "j_gy"]
+        elif "_t" in corpus_prepared.columns:
+            c, keys = corpus_prepared.filter(f"_t IN ({tiers})"), ["_t", "j_gx", "j_gy"]
+        else:
+            c, keys = corpus_prepared, ["j_gx", "j_gy"]
+        # the ring offsets: dx is taken mod nx (lon wraps; when 2*ring+1 >
+        # nx the distinct columns keep a wrapped cell from being joined
+        # twice), dy is not wrapped (rows past the poles match nothing)
+        q_exp = rem.selectExpr(
+            "q_id", "q_lat", "q_lon", "_t", "q_gy",
+            f"explode(array_distinct(transform(sequence(-{ring}, {ring}), "
+            f"d -> pmod(q_gx + d, shiftleft(2L, _t))))) AS j_gx",
+        ).selectExpr(
+            "q_id", "q_lat", "q_lon", "_t", "j_gx", f"explode(sequence(q_gy - {ring}, q_gy + {ring})) AS j_gy"
+        )
+        if broadcast_queries:
+            q_exp = F.broadcast(q_exp)
+        trust_sq = f"({ring} * {_CELL_DEG}) * ({ring} * {_CELL_DEG})"
+        rnd = (
+            q_exp.join(c, keys)
+            .filter(F.col("q_id") != F.col("n_id"))
+            .withColumn("dist_sq", dist)
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= F.lit(k))
+            .withColumn(
+                "_ok",
+                (F.count(F.lit(1)).over(wq) >= F.lit(k)) & (F.max("dist_sq").over(wq) <= F.expr(trust_sq)),
+            )
+            .select("q_id", "_t", "n_id", "dist_sq", "rank", "_ok")
+        )
+        if not live:  # no usable query: round 0's plan, emptied, for its schema
+            parts.append(rnd.limit(0))
+            break
+        rnd = rnd.localCheckpoint(eager=False)
+        if i == max_rounds - 1:
+            parts.append(rnd)  # trusted rows and the stragglers' best effort
+            break
+        ok = rnd.filter("_ok")
+        parts.append(ok)
+        # the first action on rnd: materializes its checkpoint
+        done = {r["_t"]: r["count"] for r in ok.filter("rank = 1").groupBy("_t").count().collect()}
+        live = {t: n - done.get(t, 0) for t, n in live.items() if n > done.get(t, 0)}
+        if not live:
+            break
+        rem = rem.join(ok.select("q_id"), "q_id", "left_anti").localCheckpoint(eager=False)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.select(
+        F.col("q_id").alias(query_id + "_q"),
+        F.col("n_id").alias("neighbor_id"),
+        F.col("dist_sq"),
+        F.col("rank"),
+    )
+
+
 def knn_grid_adaptive(
     queries: DataFrame,
     corpus: DataFrame,
@@ -325,69 +475,16 @@ def knn_grid_adaptive(
     corpus_prepared: DataFrame | None = None,
     broadcast_queries: bool = False,
 ) -> DataFrame:
-    """Guaranteed-k kNN via bounded ring escalation.
-
-    Round i runs the bounded-radius join at ring 2^i; queries that already
-    hold k neighbors WITHIN a provably-complete radius stop, the rest
-    escalate (classic grid-kNN doubling). Completeness guard: a neighbor
-    found at ring r is only trusted as a true top-k member if its distance
-    is <= r * cell_size (anything beyond could be beaten by a point in an
-    unexplored cell); untrusted queries re-run at the next ring.
-
-    Driver-side loop over at most max_rounds DataFrame jobs — each round
-    is fully distributed; the loop is orchestration, not per-row compute
-    (the reference's per-file loop analog, resample_regrid.py:167-196).
-    """
-    s = 180.0 / (1 << res)
-    remaining = queries
-    done_parts: list[DataFrame] = []
-    for i in range(max_rounds):
-        ring = 2**i
-        if remaining.isEmpty():
-            break
-        res_i = knn_grid(
-            remaining, corpus, k=k, ring=ring, res=res, query_id=query_id,
-            corpus_id=corpus_id, lat=lat, lon=lon, corpus_prepared=corpus_prepared,
-            broadcast_queries=broadcast_queries,
-        )
-        # lazy-checkpoint the round result: it feeds counts, trusted, the
-        # anti-join AND the final union — without this the exploded
-        # k-ring join re-executes 2-4x per round (r4 review); the next
-        # action (isEmpty / the caller's collect) materializes it
-        res_i = res_i.localCheckpoint(eager=False)
-        # trust radius: ring * cell_size in degrees (squared for dist_sq)
-        trust_sq = float((ring * s) ** 2)
-        counts = (
-            res_i.groupBy(query_id + "_q")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.max("dist_sq").alias("_maxd"),
-            )
-            .filter((F.col("_n") >= k) & (F.col("_maxd") <= F.lit(trust_sq)))
-            .select(query_id + "_q")
-        )
-        trusted = res_i.join(counts, query_id + "_q", "left_semi")
-        done_parts.append(trusted)
-        remaining = remaining.join(
-            counts.withColumnRenamed(query_id + "_q", query_id), query_id, "left_anti"
-        )
-        # truncate lineage: without this every round's `remaining` chains
-        # the previous round's FULL knn_grid plan through the anti-join,
-        # stacking Catalyst plans geometrically as rounds grow. Lazy
-        # checkpoint — the next round's isEmpty() materializes it, keeping
-        # one action per round.
-        remaining = remaining.localCheckpoint(eager=False)
-        if i == max_rounds - 1:
-            # final round: emit best-effort results for the stragglers
-            rest = res_i.join(counts, query_id + "_q", "left_anti")
-            done_parts.append(rest)
-    if not done_parts:
-        # empty query set: an empty result with the right schema
-        return knn_grid(queries, corpus, k=k, ring=1, res=res, query_id=query_id, corpus_id=corpus_id, lat=lat, lon=lon)
-    out = done_parts[0]
-    for p in done_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    """Guaranteed-k kNN via bounded ring escalation (classic grid-kNN
+    doubling): the one-tier case of _escalate, every query at `res`. The
+    driver loop is orchestration over at most max_rounds distributed
+    rounds (the reference's per-file loop, resample_regrid.py:167-196)."""
+    if corpus_prepared is not None:
+        _check_prepared(corpus_prepared, res)
+    return _escalate(
+        queries, F.lit(res), corpus, k, max_rounds, query_id, corpus_id, lat, lon,
+        corpus_prepared=corpus_prepared, broadcast_queries=broadcast_queries,
+    )
 
 
 def assign_density_res(
@@ -403,44 +500,38 @@ def assign_density_res(
     out_col: str = "_knn_res",
     sample_fraction: float | None = None,
 ) -> DataFrame:
-    """Per-query starting resolution from LOCAL corpus density (r5, the
-    fix for the r4 `weak`-at-100x flag): queries in dense cells start the
-    ring join at a FINE resolution so their candidate lists are bounded
-    by fine-cell occupancy, not base-cell population; sparse queries keep
-    the base res and rely on knn_grid_adaptive's outward ring doubling.
+    """Per-query starting resolution from LOCAL corpus density (r5):
+    queries in dense cells start the ring join at a FINE resolution so
+    their candidate lists are bounded by fine-cell occupancy, not
+    base-cell population; sparse queries keep the base res and rely on
+    the outward ring doubling.
 
-    Mechanics (all one shuffle-join shaped, no driver data):
+    Mechanics (shuffle-join shaped, no driver data):
     1. corpus cell counts ONCE at the finest ladder level `res_max`
-       (default res+12: 4096x finer per axis — at res 7 that is ~4e-4
-       deg, fine enough to split metro-block-scale point clusters; the
-       r5 5M-row bench hotspots pack ~480k pages into 0.02-deg squares
-       and need res 19 for bounded cells, which res+8 missed);
-    2. coarser ladder counts derived by CHAINED integer division of the
-       next-finer level's cell coords (gx at res r == gx at res r+d //
-       2^d, and floor division composes, so each level aggregates the
-       previous level's rows — geometrically shrinking shuffles instead
-       of len(ladder) passes over the full fine-count set);
+       (default res+12, ~4e-4 deg at res 7: the 5M-row bench hotspots
+       pack ~480k pages into 0.02-deg squares and need res 19 for
+       bounded cells, which res+8 missed);
+    2. every ladder level in ONE more aggregation: each fine cell adds
+       its count to its ancestor at every level (gx at res r == gx at
+       res_max >> (res_max - r)) — the cell-hierarchy pre-aggregation of
+       "GeoBlocks" (EDBT'21);
     3. each query explodes into its (level, ancestor-cell) keys — one
-       equi-join against the unioned ladder counts, then a per-query max:
-       chosen res = FINEST ladder level whose containing cell holds >=
+       equi-join against the ladder counts, then a per-query max: chosen
+       res = FINEST ladder level whose containing cell holds >=
        dense_threshold corpus points, else the base `res`.
 
-    The returned frame is `queries` + `out_col` (int). The bound this
-    buys: a query's round-1 candidate count is ~ring^2 x its chosen
-    cell's occupancy; choosing the finest still-dense level caps that at
-    O(dense_threshold x 4^step) for any density res_max can resolve
-    (beyond that, raise res_max — the knob trades assignment-join width
-    for the worst-cell bound). Correctness never depends on the choice:
-    every tier runs the same trust-radius escalation loop.
+    Returns `queries` + `out_col` (int). A query's round-1 candidate
+    count is ~ring^2 x its chosen cell's occupancy, so the finest
+    still-dense level caps it at O(dense_threshold x 4^step) for any
+    density res_max can resolve. Correctness never depends on the choice:
+    every tier runs the same trust-radius escalation.
 
-    sample_fraction: estimate densities from a seeded Bernoulli sample
-    of the corpus (counts scaled back up by 1/fraction before the
-    threshold test). The assignment is a pure PERFORMANCE choice — a
-    mis-assigned query just starts at a different tier and the trust-
-    radius loop still returns the exact top-k — so sampling is safe, and
-    at 10^12 rows it turns the one full-corpus count shuffle into a
-    fraction-sized one. Deterministic given a fixed corpus partitioning
-    (seeded sample); None (default) = exact counts.
+    sample_fraction: estimate densities from a seeded Bernoulli sample of
+    the corpus, each fine cell's count scaled by 1/fraction and truncated
+    before the levels sum them. Safe because the assignment is a pure
+    performance choice (a mis-assigned query starts at another tier and
+    still gets the exact top-k); deterministic given a fixed corpus
+    partitioning; None (default) = exact counts.
 
     Reference analog: dense-ping-region skew in the regrid neighborhoods
     (cruise/resample_regrid.py:62-78) + SURVEY §2.3's k-ring kNN graft."""
@@ -450,64 +541,36 @@ def assign_density_res(
         raise ValueError(f"need res_max > res and step > 0 (got res={res}, res_max={res_max}, step={step})")
     if sample_fraction is not None and not 0.0 < sample_fraction <= 1.0:
         raise ValueError(f"sample_fraction must be in (0, 1] (got {sample_fraction})")
-    ladder = list(range(res_max, res, -step))  # finest -> coarser, excl. base
+    # finest -> coarser, excl. base; cell coords are >= 0, so the ancestor
+    # at level r is a right shift by res_max - r
+    levels = "explode(array({})) AS lvl".format(", ".join(str(r) for r in range(res_max, res, -step)))
+    ancestor = (f"shiftright(_gx, {res_max} - lvl) AS cx", f"shiftright(_gy, {res_max} - lvl) AS cy")
 
     cnt_src = corpus
     cnt_expr = F.count(F.lit(1))
     if sample_fraction is not None and sample_fraction < 1.0:
         cnt_src = corpus.sample(fraction=sample_fraction, seed=42)
         cnt_expr = (cnt_expr / F.lit(sample_fraction)).cast("long")
-    cgx, cgy = cells.grid_cell_xy(F.col(lat), F.col(lon), res_max)
-    cnt_fine = (
-        cnt_src.select(cgx.alias("cx"), cgy.alias("cy"))
-        .filter(F.col("cx").isNotNull())
-        .groupBy("cx", "cy")
+    gx, gy = cells.grid_cell_xy(F.col(lat), F.col(lon), res_max)
+    counts = (
+        cnt_src.select(gx.alias("_gx"), gy.alias("_gy"))
+        .filter(F.col("_gx").isNotNull())
+        .groupBy("_gx", "_gy")
         .agg(cnt_expr.alias("cnt"))
+        .selectExpr("_gx", "_gy", "cnt", levels)
+        .selectExpr("lvl", *ancestor, "cnt")
+        .groupBy("lvl", "cx", "cy")
+        .agg(F.sum("cnt").alias("cnt"))
+        .filter(F.col("cnt") >= F.lit(dense_threshold))
     )
-    # the fine counts seed a chain of derived aggs: truncate lineage so
-    # the corpus scan + count shuffle happens once
-    cnt_fine = cnt_fine.localCheckpoint(eager=False)
-    levels = []
-    prev, prev_r = cnt_fine, res_max
-    for r in ladder:
-        if r == res_max:
-            lvl = prev.select(F.lit(r).alias("lvl"), "cx", "cy", "cnt")
-        else:
-            d = 1 << (prev_r - r)  # coarsen from the PREVIOUS level:
-            # floor division composes, and each agg shrinks 4^step-fold
-            lvl = (
-                prev.groupBy(
-                    F.floor(F.col("cx") / F.lit(d)).cast("long").alias("cx"),
-                    F.floor(F.col("cy") / F.lit(d)).cast("long").alias("cy"),
-                )
-                .agg(F.sum("cnt").alias("cnt"))
-                .select(F.lit(r).alias("lvl"), "cx", "cy", "cnt")
-            )
-            lvl = lvl.localCheckpoint(eager=False)
-            prev, prev_r = lvl.drop("lvl"), r
-        levels.append(lvl)
-    counts_all = levels[0]
-    for lvl in levels[1:]:
-        counts_all = counts_all.unionByName(lvl)
-    counts_all = counts_all.filter(F.col("cnt") >= F.lit(dense_threshold))
-
-    qgx, qgy = cells.grid_cell_xy(F.col(lat), F.col(lon), res_max)
-    key_structs = [
-        F.struct(
-            F.lit(r).alias("lvl"),
-            F.floor(F.col("_qgx") / F.lit(1 << (res_max - r))).cast("long").alias("cx"),
-            F.floor(F.col("_qgy") / F.lit(1 << (res_max - r))).cast("long").alias("cy"),
-        )
-        for r in ladder
-    ]
     q_keys = (
-        queries.select(F.col(query_id).alias("_qid"), qgx.alias("_qgx"), qgy.alias("_qgy"))
-        .filter(F.col("_qgx").isNotNull())
-        .withColumn("_k", F.explode(F.array(*key_structs)))
-        .select("_qid", F.col("_k.lvl").alias("lvl"), F.col("_k.cx").alias("cx"), F.col("_k.cy").alias("cy"))
+        queries.select(F.col(query_id).alias("_qid"), gx.alias("_gx"), gy.alias("_gy"))
+        .filter(F.col("_gx").isNotNull())
+        .selectExpr("_qid", "_gx", "_gy", levels)
+        .selectExpr("_qid", "lvl", *ancestor)
     )
     chosen = (
-        q_keys.join(counts_all, ["lvl", "cx", "cy"])  # inner: only dense levels survive
+        q_keys.join(counts, ["lvl", "cx", "cy"])  # inner: only dense levels survive
         .groupBy("_qid")
         .agg(F.max("lvl").alias(out_col))  # finest dense level
     )
@@ -534,37 +597,22 @@ def knn_grid_density(
 ) -> DataFrame:
     """Density-adaptive guaranteed-k kNN: assign each query a starting
     resolution from local corpus density (assign_density_res), then run
-    the trust-radius escalation loop (knn_grid_adaptive) once per
-    occupied tier and union.
+    the trust-radius escalation (_escalate) once, for all tiers together.
+    Same output contract as knn_grid_adaptive (true top-k for every query
+    that ends trusted, best-effort rows for stragglers after max_rounds):
+    the tier only bounds CANDIDATE counts.
 
-    collapse_exact_dups (r5): web corpora duplicate COORDINATES (every
-    page of a venue geocodes to one point), and no grid resolution
-    separates identical points — the one case where cell refinement
-    cannot bound candidates. Collapsing the corpus to at most k+1 rows
-    per exact (lat, lon) — the k+1 smallest ids — is output-identical by
-    the tie rule (order by dist then id: co-located points share dist
-    for every query, so a dropped row has >= k+1 same-coordinate
-    predecessors, at most one of which is the query itself — self-match
-    excluded — leaving >= k rows that beat it for every query; the +1
-    covers a query sitting AT the duplicated coordinate). The collapse
-    happens AFTER density assignment (tiers are chosen from the
-    uncollapsed counts), so tier choice, escalation rounds, and
-    best-effort straggler output are all bit-identical to collapse off:
-    within any candidate ring, a dropped row's k+1 predecessors share
-    its cell and therefore its ring membership, so it can never appear
-    in a top-k — trusted or best-effort. Pinned by pytest equality on a
-    duplicated-coordinate fixture including co-located queries. Cost:
-    one corpus shuffle on (lat, lon); default off because duplicate-free
-    corpora pay it for nothing.
-
-    Same output contract and exactness as knn_grid_adaptive (true top-k
-    for every query that terminates trusted; best-effort for stragglers
-    after max_rounds): the tier choice only bounds CANDIDATE counts —
-    a dense-cell query starts fine, finds >= dense_threshold >= ~2k
-    candidates in ring 1, and trusts within a ring or two; it never pays
-    the base-res hot-cell population. The driver-side loop is over at
-    most len(ladder)+1 tiers (a bounded, data-independent count — same
-    orchestration stance as knn_grid_adaptive's round loop)."""
+    collapse_exact_dups (r5): no grid resolution separates identical
+    coordinates (every page of a venue geocodes to one point), so the
+    corpus is collapsed to the k+1 smallest ids per exact (lat, lon).
+    Output-identical by the tie rule (dist, then id): co-located points
+    share dist for every query, so a dropped row has >= k+1 same-
+    coordinate predecessors, at most one of them the query itself, and
+    within any ring they share its cell, so it can never reach a top-k,
+    trusted or best-effort. The collapse runs AFTER density assignment,
+    so tiers and rounds are those of collapse off. Pinned by pytest on a
+    duplicated-coordinate fixture with co-located queries. Cost: one
+    corpus shuffle on (lat, lon); off by default."""
     if dense_threshold is None:
         dense_threshold = max(2 * k, 16)
     assigned = assign_density_res(
@@ -578,7 +626,7 @@ def knn_grid_density(
         lat=lat,
         lon=lon,
         sample_fraction=sample_fraction,
-    ).localCheckpoint(eager=False)
+    )
     if collapse_exact_dups:
         # AFTER assignment: tiers come from uncollapsed density, so the
         # collapse is invisible to tier choice and escalation (docstring
@@ -591,61 +639,6 @@ def knn_grid_density(
             .drop("_dr")
             .localCheckpoint(eager=False)
         )
-    # bounded collect: one (tier, count) row per occupied tier (<= ladder
-    # length). The count picks the tier's join strategy: a small query
-    # side explodes to well under the broadcast threshold, so every
-    # escalation round is a broadcast join against the checkpointed
-    # corpus — no corpus shuffle at all, and pre-partitioning it would be
-    # pure overhead (measured +0.6 s/tier on the 5M bench). A large query
-    # side forces sort-merge rounds that would each re-shuffle the
-    # corpus, so prepare it once per tier instead. 50k queries x ~9 ring
-    # cells x ~60 B/row ~ 27 MB — past any sane autoBroadcast setting.
-    tier_rows = assigned.groupBy("_knn_res").count().collect()
-    tiers = sorted(((r["_knn_res"], r["count"]) for r in tier_rows), reverse=True)
-
-    def _run_tier(t_nq):
-        t, nq = t_nq
-        qt = assigned.filter(F.col("_knn_res") == t).drop("_knn_res")
-        prepped = (
-            prepare_corpus_cells(corpus, t, corpus_id=corpus_id, lat=lat, lon=lon)
-            if nq > 50_000
-            else None
-        )
-        return knn_grid_adaptive(
-            qt, corpus, k=k, res=t, max_rounds=max_rounds,
-            query_id=query_id, corpus_id=corpus_id, lat=lat, lon=lon,
-            corpus_prepared=prepped,
-            # the tier count is known exactly here: a small query side
-            # broadcasts (no corpus shuffle per round); a large one
-            # uses the prepared corpus instead (see prepped above)
-            broadcast_queries=nq <= 50_000,
-        )
-
-    import os as _os
-
-    pool_n = min(int(_os.environ.get("SPARK_GRAFT_TIER_POOL", "3")), len(tiers))
-    if pool_n > 1:
-        # r6 (guide §2.6, overlap independent jobs): each tier's
-        # trust-radius loop is an independent chain of small driver
-        # actions (candidate join, count, checkpoint per round) that
-        # rarely fills the cluster on its own; running the tiers from a
-        # small thread pool lets one tier's map tasks back-fill the idle
-        # cores under another tier's count/checkpoint tail. Tier inputs
-        # are disjoint query subsets of the ALREADY-materialized
-        # `assigned` checkpoint (the tier_rows collect above forced it),
-        # so no shared lazy state races; pool.map preserves tier order,
-        # keeping the union identical to the sequential loop.
-        # pool size via SPARK_GRAFT_TIER_POOL (default 3; 1 = sequential):
-        # 2-3 in-flight tiers fill the tail without fighting for executors
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=pool_n) as pool:
-            parts = list(pool.map(_run_tier, tiers))
-    else:
-        parts = [_run_tier(t) for t in tiers]
-    if not parts:
-        return knn_grid(queries, corpus, k=k, ring=1, res=res, query_id=query_id, corpus_id=corpus_id, lat=lat, lon=lon)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _escalate(
+        assigned, F.col("_knn_res"), corpus, k, max_rounds, query_id, corpus_id, lat, lon
+    )

@@ -98,65 +98,59 @@ def normalize_rings(polygons_pdf: pd.DataFrame) -> list[tuple[int, np.ndarray]]:
     return out
 
 
+# points (or cells) x edges per vectorized block: bounds the (P x E)
+# scratch arrays to a few MB each, whatever the polygon
+_BLOCK = 1 << 18
+
+
 def _points_in_poly(x: np.ndarray, y: np.ndarray, poly: np.ndarray) -> np.ndarray:
-    """Vectorized even-odd ray cast: (N,) bool for points vs (M,2) ring."""
+    """Vectorized even-odd ray cast: (N,) bool for points vs (M,2) ring,
+    with the edges along a second axis in bounded point blocks."""
     xi, yi = poly[:, 0], poly[:, 1]
     xj, yj = np.roll(xi, 1), np.roll(yi, 1)
-    inside = np.zeros(len(x), dtype=bool)
-    for k in range(len(xi)):
-        cond = (yi[k] > y) != (yj[k] > y)
+    inside = np.empty(len(x), dtype=bool)
+    step = max(1, _BLOCK // len(xi))
+    for p0 in range(0, len(x), step):
+        py = y[p0 : p0 + step, None]
+        cond = (yi > py) != (yj > py)
         with np.errstate(divide="ignore", invalid="ignore"):
-            x_int = (xj[k] - xi[k]) * (y - yi[k]) / (yj[k] - yi[k]) + xi[k]
-        inside ^= cond & (x < x_int)
+            x_int = (xj - xi) * (py - yi) / (yj - yi) + xi
+        inside[p0 : p0 + step] = np.count_nonzero(cond & (x[p0 : p0 + step, None] < x_int), axis=1) & 1
     return inside
 
 
-def _segment_intersects_rect(poly: np.ndarray, x0: float, y0: float, x1: float, y1: float) -> bool:
-    """Any polygon edge intersects (or enters) the rectangle?"""
-    a = poly
-    b = np.roll(poly, 1, axis=0)
+def _rects_crossed(poly: np.ndarray, x0, y0, x1, y1) -> np.ndarray:
+    """Per cell rectangle ((C, 1) corner columns): does any polygon edge
+    intersect or enter it? Edges run along the second axis (C x E)."""
+    ax, ay = poly[:, 0], poly[:, 1]
+    bx, by = np.roll(ax, 1), np.roll(ay, 1)
     # quick reject: both endpoints strictly on the same outside side
-    ax, ay, bx, by = a[:, 0], a[:, 1], b[:, 0], b[:, 1]
     reject = (
         ((ax < x0) & (bx < x0))
         | ((ax > x1) & (bx > x1))
         | ((ay < y0) & (by < y0))
         | ((ay > y1) & (by > y1))
     )
-    cand = ~reject
-    if not cand.any():
-        return False
-    # endpoint inside rect => intersects
-    in_rect = (ax >= x0) & (ax <= x1) & (ay >= y0) & (ay <= y1)
-    if (in_rect & cand).any():
-        return True
-    # segment-segment tests against the 4 rectangle edges
-    rect_edges = [
-        ((x0, y0), (x1, y0)),
-        ((x1, y0), (x1, y1)),
-        ((x1, y1), (x0, y1)),
-        ((x0, y1), (x0, y0)),
-    ]
-
-    def ccw(pxa, pya, pxb, pyb, pxc, pyc):
-        return (pyc - pya) * (pxb - pxa) - (pyb - pya) * (pxc - pxa)
-
-    for (ex0, ey0), (ex1, ey1) in rect_edges:
-        d1 = ccw(ax, ay, bx, by, np.full_like(ax, ex0), np.full_like(ay, ey0))
-        d2 = ccw(ax, ay, bx, by, np.full_like(ax, ex1), np.full_like(ay, ey1))
-        d3 = ccw(np.full_like(ax, ex0), np.full_like(ay, ey0), np.full_like(ax, ex1), np.full_like(ay, ey1), ax, ay)
-        d4 = ccw(np.full_like(ax, ex0), np.full_like(ay, ey0), np.full_like(ax, ex1), np.full_like(ay, ey1), bx, by)
-        hit = cand & (((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)))
-        if hit.any():
-            return True
-    return False
+    # an endpoint inside the rect, or a proper crossing of one of its edges
+    hit = (ax >= x0) & (ax <= x1) & (ay >= y0) & (ay <= y1)
+    for ex0, ey0, ex1, ey1 in ((x0, y0, x1, y0), (x1, y0, x1, y1), (x1, y1, x0, y1), (x0, y1, x0, y0)):
+        d1 = (ey0 - ay) * (bx - ax) - (by - ay) * (ex0 - ax)
+        d2 = (ey1 - ay) * (bx - ax) - (by - ay) * (ex1 - ax)
+        d3 = (ay - ey0) * (ex1 - ex0) - (ey1 - ey0) * (ax - ex0)
+        d4 = (by - ey0) * (ex1 - ex0) - (ey1 - ey0) * (bx - ex0)
+        hit |= ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
+    return (hit & ~reject).any(axis=1)
 
 
-def polygon_cover(poly: np.ndarray, res: int) -> list[tuple[int, bool]]:
-    """Cover cells for one polygon at grid res -> [(cell_id, is_full)].
+def polygon_cover(poly: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Cover cells for one polygon at grid res -> (cell_id, is_full)
+    int64/bool arrays, bbox cells in row-major (gy, gx) order.
 
-    Rectangle-of-bbox enumeration; each cell classified FULL via the
-    conservative corner+edge test (see module docstring)."""
+    Rectangle-of-bbox enumeration; a cell is FULL when its 4 corners are
+    inside and no polygon edge intersects it (the conservative test of the
+    module docstring), BOUNDARY when a corner or its center is inside or
+    an edge intersects it, and dropped otherwise. All cells of a block are
+    classified at once."""
     s = cells.grid_res_size(res)
     nx = 2 * (1 << res)
     ny = 1 << res
@@ -166,24 +160,32 @@ def polygon_cover(poly: np.ndarray, res: int) -> list[tuple[int, bool]]:
     gx1 = max(0, min(int((max_x + 180.0) // s), nx - 1))
     gy0 = max(0, min(int((min_y + 90.0) // s), ny - 1))
     gy1 = max(0, min(int((max_y + 90.0) // s), ny - 1))
-    out = []
-    for gy in range(gy0, gy1 + 1):
+    width = gx1 - gx0 + 1
+    n_cells = width * (gy1 - gy0 + 1)
+    step = max(1, _BLOCK // len(poly))
+    ids, fulls = [], []
+    for c0 in range(0, n_cells, step):
+        gy, gx = np.divmod(np.arange(c0, min(c0 + step, n_cells), dtype=np.int64), width)
+        gy += gy0
+        gx += gx0
+        x0 = gx * s - 180.0
+        x1 = x0 + s
         y0 = gy * s - 90.0
         y1 = y0 + s
-        for gx in range(gx0, gx1 + 1):
-            x0 = gx * s - 180.0
-            x1 = x0 + s
-            corners_x = np.array([x0, x1, x1, x0])
-            corners_y = np.array([y0, y0, y1, y1])
-            corner_in = _points_in_poly(corners_x, corners_y, poly)
-            seg = _segment_intersects_rect(poly, x0, y0, x1, y1)  # O(edges): test once
-            if corner_in.all() and not seg:
-                out.append((cells.pack_cell(res, gx, gy), True))
-            elif corner_in.any() or seg or _points_in_poly(
-                np.array([(x0 + x1) / 2]), np.array([(y0 + y1) / 2]), poly
-            )[0]:
-                out.append((cells.pack_cell(res, gx, gy), False))
-    return out
+        n = len(gx)
+        # 4 corners then the center of every cell, as one point block
+        inside = _points_in_poly(
+            np.concatenate([x0, x1, x1, x0, (x0 + x1) / 2]),
+            np.concatenate([y0, y0, y1, y1, (y0 + y1) / 2]),
+            poly,
+        ).reshape(5, n)
+        corner_in = inside[:4]
+        seg = _rects_crossed(poly, x0[:, None], y0[:, None], x1[:, None], y1[:, None])
+        full = corner_in.all(axis=0) & ~seg
+        keep = full | corner_in.any(axis=0) | seg | inside[4]
+        ids.append(cells.pack_cell(res, gx[keep], gy[keep]))
+        fulls.append(full[keep])
+    return np.concatenate(ids).astype(np.int64), np.concatenate(fulls)
 
 
 # above this many polygons, cover construction (O(cells x edges) numpy per
@@ -225,15 +227,9 @@ def build_cover_df(
             for pdf in batches:
                 # one input row = one polygon, so a polygon's antimeridian
                 # lobes are always merged within this batch's seen-dict
-                seen = _cover_rows_with_res(normalize_rings(pdf), res)
-                if seen:
-                    yield pd.DataFrame(
-                        {
-                            "polygon_id": np.fromiter((k[0] for k in seen), dtype=np.int64, count=len(seen)),
-                            "cell_id": np.fromiter((k[1] for k in seen), dtype=np.int64, count=len(seen)),
-                            "is_full": np.fromiter(seen.values(), dtype=bool, count=len(seen)),
-                        }
-                    )
+                cover = _cover_pdf(normalize_rings(pdf), res)
+                if len(cover):
+                    yield cover
 
         out = src.repartition(n_tasks).mapInPandas(
             cover_batches, "polygon_id long, cell_id long, is_full boolean"
@@ -242,20 +238,27 @@ def build_cover_df(
         # polygon_id rows (each then covers in a different task)
         return out.groupBy("polygon_id", "cell_id").agg(F.bool_or("is_full").alias("is_full"))
 
-    seen = _cover_rows_with_res(rings if rings is not None else normalize_rings(polygons), res)
-    rows = [(pid, cell, full) for (pid, cell), full in seen.items()]
-    return spark.createDataFrame(rows, schema=schema)
+    # a pandas frame becomes an Arrow-backed LocalRelation: no Python-RDD
+    # conversion job on the driver
+    pdf = _cover_pdf(rings if rings is not None else normalize_rings(polygons), res)
+    return spark.createDataFrame(pdf, schema=schema)
 
 
-def _cover_rows_with_res(ring_iter, res: int) -> dict[tuple[int, int], bool]:
-    """(pid, ring) iterable -> {(pid, cell_id): is_full}; FULL from either
-    antimeridian lobe wins when lobes share a cell."""
-    seen: dict[tuple[int, int], bool] = {}
+def _cover_pdf(ring_iter, res: int) -> pd.DataFrame:
+    """(pid, ring) iterable -> cover rows (polygon_id, cell_id, is_full);
+    FULL from either antimeridian lobe wins when lobes share a cell."""
+    parts = []
     for pid, ring in ring_iter:
-        for cell, full in polygon_cover(ring, res):
-            key = (pid, int(cell))
-            seen[key] = seen.get(key, False) or full
-    return seen
+        cell_id, is_full = polygon_cover(ring, res)
+        parts.append(
+            pd.DataFrame({"polygon_id": np.full(len(cell_id), pid, dtype=np.int64), "cell_id": cell_id, "is_full": is_full})
+        )
+    if not parts:
+        return pd.DataFrame(
+            {"polygon_id": np.empty(0, np.int64), "cell_id": np.empty(0, np.int64), "is_full": np.empty(0, bool)}
+        )
+    pdf = pd.concat(parts, ignore_index=True)
+    return pdf.groupby(["polygon_id", "cell_id"], sort=False, as_index=False)["is_full"].any()
 
 
 def pip_join(

@@ -34,13 +34,15 @@ def build_edges_df(
     """Polygon table -> broadcastable edge table (polygon_id, xi, yi, xj, yj)."""
     from .pip import normalize_rings
 
-    rows = []
     # lobes (antimeridian split) pool their edges under one polygon_id:
     # disjoint lobes keep even-odd parity correct over the combined set
-    for pid, ring in (rings if rings is not None else normalize_rings(polygons_pdf)):
-        prev = np.roll(ring, 1, axis=0)
-        for (xi, yi), (xj, yj) in zip(ring, prev):
-            rows.append((pid, float(xi), float(yi), float(xj), float(yj)))
+    ring_list = rings if rings is not None else normalize_rings(polygons_pdf)
+    pid = np.repeat(
+        np.array([p for p, _ in ring_list], dtype=np.int64), np.array([len(r) for _, r in ring_list], dtype=np.int64)
+    )
+    xy = np.concatenate([r for _, r in ring_list] or [np.empty((0, 2))])
+    prev = np.concatenate([np.roll(r, 1, axis=0) for _, r in ring_list] or [np.empty((0, 2))])
+    pdf = pd.DataFrame({"polygon_id": pid, "xi": xy[:, 0], "yi": xy[:, 1], "xj": prev[:, 0], "yj": prev[:, 1]})
     schema = T.StructType(
         [
             T.StructField("polygon_id", T.LongType(), False),
@@ -50,7 +52,9 @@ def build_edges_df(
             T.StructField("yj", T.DoubleType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema=schema)
+    # a pandas frame becomes an Arrow-backed LocalRelation: no Python-RDD
+    # conversion job on the driver
+    return spark.createDataFrame(pdf, schema=schema)
 
 
 def pip_join_jvm(

@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import cells
@@ -78,15 +78,17 @@ def run_pipeline(
     else:
         done = set()
     if "l1" not in done:
-        l1 = ingest_l1(pages, grid_res=grid_res, with_s2=with_s2)
+        # the lineage row count rides on the write job itself (an
+        # Observation) instead of a second scan of what it wrote
+        rows = Observation("l1_rows")
+        l1 = ingest_l1(pages, grid_res=grid_res, with_s2=with_s2).observe(rows, F.count(F.lit(1)).alias("n"))
         # sort each task's output by cell id: parquet row-group min/max
         # stats become selective, so cell-range readers (tile servers,
         # per-region jobs) skip row groups instead of scanning L1
         paths["l1"] = write_table(
             l1, out_root, "l1_pages", partition_by=("lang",), sort_within=("cell_id",)
         )
-        l1_read = spark.read.parquet(paths["l1"])
-        log.record("l1", [("l1", None, l1_read.count(), None)], "SUCCESS")
+        log.record("l1", [("l1", None, rows.get["n"], None)], "SUCCESS")
     else:
         paths["l1"] = os.path.join(out_root, "l1_pages")
     l1 = spark.read.parquet(paths["l1"])

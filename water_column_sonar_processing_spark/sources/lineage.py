@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -83,7 +84,11 @@ class LineageLog:
         """batch_rows: (batch_id, partition_id, row_count, fingerprint)."""
         now = time.time()
         rows = [(stage, b, p, r, f, status, now) for b, p, r, f in batch_rows]
-        df = self.spark.createDataFrame(rows, schema=LINEAGE_SCHEMA)
+        # from pandas, the rows become an Arrow-backed LocalRelation: the
+        # write is the only job (a row list would first run a Python-RDD
+        # conversion job)
+        pdf = pd.DataFrame(rows, columns=LINEAGE_SCHEMA.names)
+        df = self.spark.createDataFrame(pdf, schema=LINEAGE_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.path)
 
     def record_stage_metrics(self, stage: str, df: DataFrame, batch_col: str, status: str = STATUS_SUCCESS) -> None:
