@@ -4,12 +4,28 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
 from water_column_sonar_processing_spark.operators import tracks as tracks_op
 from water_column_sonar_processing_spark.sources import geojson as gj
 from water_column_sonar_processing_spark.streaming.ingest import stream_ingest_l1
+
+
+@contextmanager
+def _no_data_batches_off(spark):
+    """sessionize_stream's processing-time timeout asks for another
+    (no-data) batch after every batch, so an availableNow query over it
+    never terminates and keeps running after the test. With no-data
+    batches off the drain ends once the landed files are processed."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_geojson_roundtrip(spark, track_points_df):
@@ -88,21 +104,22 @@ def test_stateful_sessionize_stream_matches_batch(spark, tmp_path):
     pdf.to_parquet(in_dir + "/b1.parquet", index=False)
 
     src = spark.readStream.schema("user_id long, ts_us long").parquet(in_dir)
-    q = (
-        sessionize_stream(src)
-        .writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with _no_data_batches_off(spark):
+        q = (
+            sessionize_stream(src)
+            .writeStream.format("memory")
+            .queryName("sessions_out")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
     got = spark.table("sessions_out").toPandas()
 
     batch = sessionize_batch(spark.createDataFrame(pdf)).toPandas()
-    # gap-closed sessions MUST be emitted; open tails emit only if the
-    # 60s processing-time timeout fired during the drain (timing-
-    # dependent) — so: stream ⊆ batch and closed ⊆ stream, exactly
+    # gap-closed sessions MUST be emitted; open tails emit only when the
+    # processing-time timeout fires, which a drain without no-data
+    # batches never runs — so: stream ⊆ batch and closed ⊆ stream, exactly
     open_tail = batch.sort_values("session_end").groupby("user_id").tail(1)
     closed = batch.merge(open_tail, how="left", indicator=True).query("_merge == 'left_only'")
     key = ["user_id", "session_start", "session_end", "n_events"]
@@ -137,16 +154,17 @@ def test_stateful_sessionize_resumes_across_drains(spark, tmp_path):
     def drain():
         # parquet sink: the memory sink can't recover from a checkpoint
         src = spark.readStream.schema("user_id long, ts_us long").parquet(in_dir)
-        q = (
-            sessionize_stream(src)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        with _no_data_batches_off(spark):
+            q = (
+                sessionize_stream(src)
+                .writeStream.format("parquet")
+                .option("path", out_dir)
+                .outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            assert q.awaitTermination(120)
         return spark.read.parquet(out_dir).toPandas()
 
     out1 = drain()

@@ -35,7 +35,11 @@ def sessionize_stream(
     Emits a session row whenever an arriving batch shows a gap > gap_us
     for that key (plus the still-open session on processing-time timeout).
     Designed for availableNow/one-shot drains in tests; on a live stream
-    the timeout closes idle sessions."""
+    the timeout closes idle sessions. The processing-time timeout makes
+    every batch ask for a following no-data batch, so an availableNow
+    drain terminates only with
+    `spark.sql.streaming.noDataMicroBatches.enabled=false` set when the
+    query starts (open sessions then stay in state for the next drain)."""
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
