@@ -329,10 +329,13 @@ def test_one_pass_ladder_matches_pandas(spark, sample_fraction):
     assert len(set(want.tolist())) >= 3
 
 
-def test_partitioned_tier_corpus_matches_broadcast(spark, monkeypatch):
-    """Past _BROADCAST_MAX_QUERIES the loop joins a corpus partitioned and
-    sorted once on (_t, j_gx, j_gy) instead of broadcasting the queries:
-    an execution-strategy change only, so the rows are identical."""
+@pytest.mark.parametrize("split", ["all", "mixed"])
+def test_partitioned_tier_corpus_matches_broadcast(spark, monkeypatch, split):
+    """A tier past _BROADCAST_MAX_QUERIES joins a corpus partitioned and
+    sorted once on (_t, j_gx, j_gy) instead of broadcasting its queries;
+    the decision is per tier, so with a threshold between the tier sizes
+    the small tiers still broadcast. An execution-strategy change only:
+    the rows are identical."""
     geo = gen_pages(2000)[["url", "lat", "lon"]].dropna()
     df = spark.createDataFrame(geo).localCheckpoint()
     q = df.filter(F.abs(F.xxhash64("url")) % 8 == 0).localCheckpoint()
@@ -343,5 +346,27 @@ def test_partitioned_tier_corpus_matches_broadcast(spark, monkeypatch):
         )
 
     broadcast = run()
-    monkeypatch.setattr(K, "_BROADCAST_MAX_QUERIES", 0)
+    sizes = sorted(
+        r["count"]
+        for r in K.assign_density_res(q, df, res=7, res_max=15, step=2, dense_threshold=16)
+        .groupBy("_knn_res")
+        .count()
+        .collect()
+    )
+    threshold = 0 if split == "all" else sizes[0]
+    big = [n for n in sizes if n > threshold]
+    assert big and (split == "all" or len(big) < len(sizes))
+    projected = []
+    project = K._project_corpus_cells
+
+    def spy(corpus, res, *args):
+        projected.append(res)
+        return project(corpus, res, *args)
+
+    monkeypatch.setattr(K, "_BROADCAST_MAX_QUERIES", threshold)
+    monkeypatch.setattr(K, "_project_corpus_cells", spy)
     assert run() == broadcast and len(broadcast) > 0
+    # the partitioned corpus is built once, before the rounds; in the
+    # mixed case the later rounds also project the small tiers per round
+    assert len(projected[0]) == len(big)
+    assert (len(projected) > 1) == (split == "mixed")

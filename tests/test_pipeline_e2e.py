@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from water_column_sonar_processing_spark.plans.pipeline import run_pipeline
@@ -79,6 +80,44 @@ def test_run_pipeline_trackless_pages(spark, tmp_path):
     l1_log = LineageLog(spark, str(tmp_path / "out")).read().filter(F.col("stage") == "l1")
     assert [r["row_count"] for r in l1_log.collect()] == [50]
     assert spark.read.parquet(paths["pip"]).count() == 50
+
+
+def _lang_pages(spark, langs, n):
+    return spark.createDataFrame(
+        [(f"{lang}{i}", f"url={lang}{i} lat=10.0000{i % 10} lon=20.0000{i % 10}", lang) for lang in langs for i in range(n)],
+        "url string, text string, lang string",
+    )
+
+
+def test_run_pipeline_rerun_lineage_counts_whole_l1(spark, tmp_path):
+    """A rerun into an existing out_root overwrites only the `lang`
+    partitions it writes: the L1 lineage row_count is still the row count
+    of the L1 table that L2 then reads, not of this run's write."""
+    import pandas as pd
+
+    polys = pd.DataFrame([dict(polygon_id=0, wkt="POLYGON ((5 5, 25 5, 25 25, 5 25, 5 5))")])
+    out = str(tmp_path / "out")
+    run_pipeline(spark, _lang_pages(spark, ["en", "de"], 20), polys, out, resume=False)
+    paths = run_pipeline(spark, _lang_pages(spark, ["fr"], 10), polys, out, resume=False)
+    assert spark.read.parquet(paths["l1"]).count() == 50
+    l1_log = LineageLog(spark, out).read().filter(F.col("stage") == "l1")
+    assert sorted(r["row_count"] for r in l1_log.collect()) == [40, 50]
+    assert spark.read.parquet(paths["pip"]).count() == 50
+
+
+def test_run_pipeline_empty_input_does_not_mark_l1_done(spark, tmp_path):
+    """An empty pages table leaves no readable L1 table; the run fails at
+    that read, before the L1 stage is recorded, so a resume run retries
+    L1 instead of skipping it."""
+    import pandas as pd
+    from pyspark.errors import AnalysisException
+
+    polys = pd.DataFrame([dict(polygon_id=0, wkt="POLYGON ((5 5, 25 5, 25 25, 5 25, 5 5))")])
+    out = str(tmp_path / "out")
+    with pytest.raises(AnalysisException):
+        run_pipeline(spark, _lang_pages(spark, [], 1), polys, out)
+    log = LineageLog(spark, out)
+    assert not log.exists() or log.completed_batches("l1").count() == 0
 
 
 def test_run_pipeline_l2_resume_skips_recompute(spark, tmp_path, pages_pdf, polygons_pdf):

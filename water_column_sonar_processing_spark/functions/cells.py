@@ -152,12 +152,24 @@ def grid_cell_xy(lat: Column, lon: Column, res: int) -> tuple[Column, Column]:
     the shared helper, so every caller — knn, tiles, streaming tiles —
     inherits it instead of re-adding per-site filters); NULL keys then
     drop out of equi-joins and groupBys naturally."""
-    s = grid_res_size(res)
-    nx = 2 * (1 << res)
-    ny = 1 << res
+    return grid_cell_xy_at(lat, lon, F.lit(res))
+
+
+def grid_res_size_at(res: Column) -> Column:
+    """Column form of :func:`grid_res_size` for a per-row resolution:
+    180/2^res is exact in binary, so it equals the scalar bit for bit."""
+    return F.lit(180.0) / F.pow(F.lit(2.0), res)
+
+
+def grid_cell_xy_at(lat: Column, lon: Column, res: Column) -> tuple[Column, Column]:
+    """:func:`grid_cell_xy` at a per-row resolution (an int column, e.g. a
+    density tier); with a literal res the cell size and bounds fold to
+    the same constants, so this is the one grid (gx, gy) definition."""
+    s = grid_res_size_at(res)
+    ny = F.pow(F.lit(2.0), res).cast("long")
     ok = lat.isNotNull() & lon.isNotNull() & ~F.isnan(lat) & ~F.isnan(lon)
-    gx = F.greatest(F.least(F.floor((lon + F.lit(180.0)) / F.lit(s)), F.lit(nx - 1)), F.lit(0)).cast("long")
-    gy = F.greatest(F.least(F.floor((lat + F.lit(90.0)) / F.lit(s)), F.lit(ny - 1)), F.lit(0)).cast("long")
+    gx = F.greatest(F.least(F.floor((lon + F.lit(180.0)) / s), F.lit(2) * ny - F.lit(1)), F.lit(0)).cast("long")
+    gy = F.greatest(F.least(F.floor((lat + F.lit(90.0)) / s), ny - F.lit(1)), F.lit(0)).cast("long")
     return F.when(ok, gx), F.when(ok, gy)
 
 

@@ -67,7 +67,6 @@ def _grid_candidates(
         raise ValueError("corpus_prepared and salt_buckets are mutually exclusive")
     if corpus_prepared is not None:
         _check_prepared(corpus_prepared, res)
-    nx = 2 * (1 << res)
     q_gx, q_gy = cells.grid_cell_xy(F.col(lat), F.col(lon), res)
     q = (
         queries.filter(F.col(lat).isNotNull() & F.col(lon).isNotNull())
@@ -79,19 +78,7 @@ def _grid_candidates(
             q_gy.alias("q_gy"),
         )
     )
-    # canonicalize dx modulo nx: when 2*ring+1 > nx the raw range would
-    # alias the same wrapped column twice, duplicating candidate pairs
-    # (which then eat top-k slots); gy is clamped, not wrapped, so dy
-    # cannot alias
-    dxs = sorted({((dx % nx) + nx) % nx for dx in range(-ring, ring + 1)})
-    offsets = [(dx, dy) for dx in dxs for dy in range(-ring, ring + 1)]
-    off = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in offsets])
-    q_exp = (
-        q.withColumn("o", F.explode(off))
-        .withColumn("j_gx", (F.col("q_gx") + F.col("o.dx") + F.lit(nx)) % F.lit(nx))
-        .withColumn("j_gy", F.col("q_gy") + F.col("o.dy"))
-        .drop("o")
-    )
+    q_exp = _ring_cells(q, ring, str(2 * (1 << res)), ["q_id", "q_lat", "q_lon"])
     if corpus_prepared is not None:
         c = corpus_prepared
     else:
@@ -106,26 +93,43 @@ def _grid_candidates(
             .drop("_salt")
             .filter(F.col("q_id") != F.col("n_id"))
         )
-    return q_exp.join(c, ["j_gx", "j_gy"]).filter(F.col("q_id") != F.col("n_id"))
+    return _cell_join(q_exp, c)
+
+
+def _ring_cells(q: DataFrame, ring: int, nx: str, keep: list[str]) -> DataFrame:
+    """THE ring builder of the cell join: each (q_gx, q_gy) row explodes
+    into the join keys (j_gx, j_gy) of every cell within Chebyshev
+    distance `ring`, as one SQL expression (not one py4j call per offset
+    literal). dx is taken mod `nx` (SQL text; lon wraps): when 2*ring+1 >
+    nx the distinct columns keep a wrapped cell from being joined twice,
+    which would duplicate candidate pairs that then eat top-k slots. dy
+    is not wrapped (rows past the poles match nothing). `keep` columns
+    ride along."""
+    return q.selectExpr(
+        *keep,
+        "q_gy",
+        f"explode(array_distinct(transform(sequence(-{ring}, {ring}), d -> pmod(q_gx + d, {nx})))) AS j_gx",
+    ).selectExpr(*keep, "j_gx", f"explode(sequence(q_gy - {ring}, q_gy + {ring})) AS j_gy")
 
 
 def _project_corpus_cells(
-    corpus: DataFrame, res: int, corpus_id: str, lat: str, lon: str
+    corpus: DataFrame, res: int | list[int], corpus_id: str, lat: str, lon: str
 ) -> DataFrame:
     """The ONE corpus-side projection for the cell join — shared by the
-    per-call path and prepare_corpus_cells so null/NaN guards and column
-    shape cannot drift between them."""
-    c_gx, c_gy = cells.grid_cell_xy(F.col(lat), F.col(lon), res)
-    return (
-        corpus.filter(F.col(lat).isNotNull() & F.col(lon).isNotNull())
-        .select(
-            F.col(corpus_id).alias("n_id"),
-            F.col(lat).alias("n_lat"),
-            F.col(lon).alias("n_lon"),
-            c_gx.alias("j_gx"),
-            c_gy.alias("j_gy"),
-        )
+    per-call path, prepare_corpus_cells and the escalation loop so
+    null/NaN guards and column shape cannot drift between them:
+    (n_id, n_lat, n_lon, j_gx, j_gy) at `res`, or, for a list of tiers,
+    one row per point and tier, keyed (_t, j_gx, j_gy)."""
+    c = corpus.filter(F.col(lat).isNotNull() & F.col(lon).isNotNull()).select(
+        F.col(corpus_id).alias("n_id"), F.col(lat).alias("n_lat"), F.col(lon).alias("n_lon")
     )
+    if isinstance(res, list):
+        c = c.selectExpr("*", f"explode(array({', '.join(map(str, res))})) AS _t")
+        t, tcol = F.col("_t"), ["_t"]
+    else:
+        t, tcol = F.lit(res), []
+    c_gx, c_gy = cells.grid_cell_xy_at(F.col("n_lat"), F.col("n_lon"), t)
+    return c.select("n_id", "n_lat", "n_lon", *tcol, c_gx.alias("j_gx"), c_gy.alias("j_gy"))
 
 
 def prepare_corpus_cells(
@@ -305,40 +309,17 @@ def _check_prepared(corpus_prepared: DataFrame, res: int) -> None:
         )
 
 
-# a query side up to this many rows is broadcast into every escalation
-# round (no corpus shuffle at all); a larger one joins a corpus that is
-# partitioned and sorted on (_t, j_gx, j_gy) once. 50k queries x ~9 ring
-# cells x ~60 B/row ~ 27 MB — past any sane autoBroadcast setting.
+# a density tier with up to this many queries broadcasts its query side
+# into every escalation round (no corpus shuffle at all); a larger tier
+# joins a corpus partitioned and sorted on (_t, j_gx, j_gy) once. 50k
+# queries x ~9 ring cells x ~60 B/row ~ 27 MB — past any sane
+# autoBroadcast setting.
 _BROADCAST_MAX_QUERIES = 50_000
 
-# grid_cell_xy's cell size at each row's tier `_t`, as SQL: 180/2^t is
-# exact in binary, so the per-row value equals grid_cell_xy's literal bit
-# for bit (and so do the cells and trust radii derived from it)
-_CELL_DEG = "(180.0D / shiftleft(1L, _t))"
 
-
-def _tier_cells_sql(lat: str, lon: str) -> tuple[str, str]:
-    """grid_cell_xy (gx, gy) at each row's tier `_t` (NaN rows are
-    filtered out before, by _valid)."""
-    gx = f"greatest(least(floor(({lon} + 180.0D) / {_CELL_DEG}), shiftleft(2L, _t) - 1), 0)"
-    gy = f"greatest(least(floor(({lat} + 90.0D) / {_CELL_DEG}), shiftleft(1L, _t) - 1), 0)"
-    return gx, gy
-
-
-def _valid(lat: str, lon: str):
-    return F.col(lat).isNotNull() & F.col(lon).isNotNull() & ~F.isnan(lat) & ~F.isnan(lon)
-
-
-def _tier_corpus(corpus: DataFrame, tiers: str, corpus_id: str, lat: str, lon: str) -> DataFrame:
-    """The corpus keyed at every tier of the SQL list `tiers`: one
-    (n_id, n_lat, n_lon, _t, j_gx, j_gy) row per point and tier."""
-    gx, gy = _tier_cells_sql("n_lat", "n_lon")
-    return (
-        corpus.filter(_valid(lat, lon))
-        .select(F.col(corpus_id).alias("n_id"), F.col(lat).alias("n_lat"), F.col(lon).alias("n_lon"))
-        .selectExpr("*", f"explode(array({tiers})) AS _t")
-        .selectExpr("*", f"{gx} AS j_gx", f"{gy} AS j_gy")
-    )
+def _cell_join(q_exp: DataFrame, c: DataFrame) -> DataFrame:
+    keys = [key for key in ("_t", "j_gx", "j_gy") if key in c.columns]
+    return q_exp.join(c, keys).filter(F.col("q_id") != F.col("n_id"))
 
 
 def _escalate(
@@ -352,7 +333,7 @@ def _escalate(
     lat: str,
     lon: str,
     corpus_prepared: DataFrame | None = None,
-    broadcast_queries: bool | None = None,
+    auto: bool = False,
 ) -> DataFrame:
     """Guaranteed-k kNN by trust-radius ring escalation, for queries whose
     starting resolution (`tier`, an int column) may differ row to row.
@@ -366,77 +347,69 @@ def _escalate(
     and each round is checkpointed once for its trusted rows, its
     per-tier counts and the next round's anti-join.
 
-    broadcast_queries: True broadcasts every round's query side; None
-    (auto) does so up to _BROADCAST_MAX_QUERIES queries and otherwise
-    partitions and sorts the tier-keyed corpus once. corpus_prepared: a
-    prepare_corpus_cells frame, for a single tier at its res."""
+    auto (density tiers), decided per tier from its query count: a tier
+    of up to _BROADCAST_MAX_QUERIES broadcasts its query side every
+    round; the larger tiers join a corpus keyed at those tiers only,
+    partitioned and sorted once. Otherwise every round is a shuffle join,
+    against corpus_prepared (a prepare_corpus_cells frame, for a single
+    tier at its res) when given."""
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1 (got {max_rounds})")
-    gx, gy = _tier_cells_sql("q_lat", "q_lon")
+    q_gx, q_gy = cells.grid_cell_xy_at(F.col(lat), F.col(lon), tier)
     rem = (
-        queries.filter(_valid(lat, lon))
-        .select(
+        queries.select(
             F.col(query_id).alias("q_id"),
             F.col(lat).alias("q_lat"),
             F.col(lon).alias("q_lon"),
             tier.cast("int").alias("_t"),
+            q_gx.alias("q_gx"),
+            q_gy.alias("q_gy"),
         )
-        .selectExpr("*", f"{gx} AS q_gx", f"{gy} AS q_gy")
+        .filter(F.col("q_gx").isNotNull())  # NULL/NaN coords
         .localCheckpoint(eager=False)
     )
     live = {r["_t"]: r["count"] for r in rem.groupBy("_t").count().collect()}
-
-    def sql_list(tiers) -> str:  # "0" stands in for no tier: it matches no query
-        return ", ".join(map(str, sorted(tiers))) or "0"
-
-    if broadcast_queries is None:
-        broadcast_queries = sum(live.values()) <= _BROADCAST_MAX_QUERIES
-        if not broadcast_queries and corpus_prepared is None:
-            corpus_prepared = (
-                _tier_corpus(corpus, sql_list(live), corpus_id, lat, lon)
-                .repartition("_t", "j_gx", "j_gy")
-                .sortWithinPartitions("_t", "j_gx", "j_gy")
-                .localCheckpoint()
-            )
+    big = sorted(t for t, n in live.items() if n > _BROADCAST_MAX_QUERIES) if auto else []
+    if big:
+        big_corpus = (
+            _project_corpus_cells(corpus, big, corpus_id, lat, lon)
+            .repartition("_t", "j_gx", "j_gy")
+            .sortWithinPartitions("_t", "j_gx", "j_gy")
+            .localCheckpoint()
+        )
     w = Window.partitionBy("q_id").orderBy(F.col("dist_sq").asc(), F.col("n_id").asc())
     wq = Window.partitionBy("q_id")
     dist = geo.planar_deg_sq_wrapped(F.col("q_lat"), F.col("q_lon"), F.col("n_lat"), F.col("n_lon"))
     parts: list[DataFrame] = []
     for i in range(max_rounds):
         ring = 1 << i
-        tiers = sql_list(live)
-        if corpus_prepared is None:
-            c, keys = _tier_corpus(corpus, tiers, corpus_id, lat, lon), ["_t", "j_gx", "j_gy"]
-        elif "_t" in corpus_prepared.columns:
-            c, keys = corpus_prepared.filter(f"_t IN ({tiers})"), ["_t", "j_gx", "j_gy"]
-        else:
-            c, keys = corpus_prepared, ["j_gx", "j_gy"]
-        # the ring offsets: dx is taken mod nx (lon wraps; when 2*ring+1 >
-        # nx the distinct columns keep a wrapped cell from being joined
-        # twice), dy is not wrapped (rows past the poles match nothing)
-        q_exp = rem.selectExpr(
-            "q_id", "q_lat", "q_lon", "_t", "q_gy",
-            f"explode(array_distinct(transform(sequence(-{ring}, {ring}), "
-            f"d -> pmod(q_gx + d, shiftleft(2L, _t))))) AS j_gx",
-        ).selectExpr(
-            "q_id", "q_lat", "q_lon", "_t", "j_gx", f"explode(sequence(q_gy - {ring}, q_gy + {ring})) AS j_gy"
-        )
-        if broadcast_queries:
-            q_exp = F.broadcast(q_exp)
-        trust_sq = f"({ring} * {_CELL_DEG}) * ({ring} * {_CELL_DEG})"
+        q_exp = _ring_cells(rem, ring, "shiftleft(2L, _t)", ["q_id", "q_lat", "q_lon", "_t"])
+        # no usable query: any tier gives round 0's plan, empty, for its schema
+        small = [t for t in sorted(live) if t not in big] if live else [0]
+        big_live = [t for t in big if t in live]
+        sides = []
+        if small:
+            c = corpus_prepared
+            if c is None:
+                c = _project_corpus_cells(corpus, small, corpus_id, lat, lon)
+            q_small = q_exp.filter(f"_t IN ({', '.join(map(str, small))})") if big else q_exp
+            sides.append(_cell_join(F.broadcast(q_small) if auto else q_small, c))
+        if big_live:
+            in_big = f"_t IN ({', '.join(map(str, big_live))})"
+            sides.append(_cell_join(q_exp.filter(in_big), big_corpus.filter(in_big)))
+        cand = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
+        trust = F.lit(ring) * cells.grid_res_size_at(F.col("_t"))
         rnd = (
-            q_exp.join(c, keys)
-            .filter(F.col("q_id") != F.col("n_id"))
-            .withColumn("dist_sq", dist)
+            cand.withColumn("dist_sq", dist)
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= F.lit(k))
             .withColumn(
                 "_ok",
-                (F.count(F.lit(1)).over(wq) >= F.lit(k)) & (F.max("dist_sq").over(wq) <= F.expr(trust_sq)),
+                (F.count(F.lit(1)).over(wq) >= F.lit(k)) & (F.max("dist_sq").over(wq) <= trust * trust),
             )
             .select("q_id", "_t", "n_id", "dist_sq", "rank", "_ok")
         )
-        if not live:  # no usable query: round 0's plan, emptied, for its schema
+        if not live:
             parts.append(rnd.limit(0))
             break
         rnd = rnd.localCheckpoint(eager=False)
@@ -473,7 +446,6 @@ def knn_grid_adaptive(
     lat: str = "lat",
     lon: str = "lon",
     corpus_prepared: DataFrame | None = None,
-    broadcast_queries: bool = False,
 ) -> DataFrame:
     """Guaranteed-k kNN via bounded ring escalation (classic grid-kNN
     doubling): the one-tier case of _escalate, every query at `res`. The
@@ -483,7 +455,7 @@ def knn_grid_adaptive(
         _check_prepared(corpus_prepared, res)
     return _escalate(
         queries, F.lit(res), corpus, k, max_rounds, query_id, corpus_id, lat, lon,
-        corpus_prepared=corpus_prepared, broadcast_queries=broadcast_queries,
+        corpus_prepared=corpus_prepared,
     )
 
 
@@ -640,5 +612,5 @@ def knn_grid_density(
             .localCheckpoint(eager=False)
         )
     return _escalate(
-        assigned, F.col("_knn_res"), corpus, k, max_rounds, query_id, corpus_id, lat, lon
+        assigned, F.col("_knn_res"), corpus, k, max_rounds, query_id, corpus_id, lat, lon, auto=True
     )

@@ -77,9 +77,14 @@ def run_pipeline(
         done = {r.batch_id for r in log.completed_batches("l1").collect()}
     else:
         done = set()
+    l1_dir = os.path.join(out_root, "l1_pages")
     if "l1" not in done:
         # the lineage row count rides on the write job itself (an
-        # Observation) instead of a second scan of what it wrote
+        # Observation) when the write creates the table. Into an existing
+        # one, dynamic partition overwrite keeps the `lang` partitions
+        # this run does not write, so only a count of the table as read
+        # matches what L2 consumes.
+        fresh = not os.path.exists(l1_dir)
         rows = Observation("l1_rows")
         l1 = ingest_l1(pages, grid_res=grid_res, with_s2=with_s2).observe(rows, F.count(F.lit(1)).alias("n"))
         # sort each task's output by cell id: parquet row-group min/max
@@ -88,10 +93,13 @@ def run_pipeline(
         paths["l1"] = write_table(
             l1, out_root, "l1_pages", partition_by=("lang",), sort_within=("cell_id",)
         )
-        log.record("l1", [("l1", None, rows.get["n"], None)], "SUCCESS")
+        # L1 is marked done only once it reads back: a write that left no
+        # readable table is retried by a resume run
+        l1 = spark.read.parquet(paths["l1"])
+        log.record("l1", [("l1", None, rows.get["n"] if fresh else l1.count(), None)], "SUCCESS")
     else:
-        paths["l1"] = os.path.join(out_root, "l1_pages")
-    l1 = spark.read.parquet(paths["l1"])
+        paths["l1"] = l1_dir
+        l1 = spark.read.parquet(paths["l1"])
 
     # ---- L1 metadata + offsets (create_empty_zarr_store analog) — the
     # track stages only exist for track-shaped inputs (ingest_l1 guards
